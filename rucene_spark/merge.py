@@ -108,8 +108,10 @@ def delete_by_keys(index_dir: str, keys: list, gen: int | None = None) -> int:
 DV_UPDATES = "dv_updates"
 # overlay rows above this broadcast-join cap fall back to a shuffle join
 # (mirrors the searcher's RUCENE_TOMB_BCAST_CAP tombstone-broadcast cap;
-# see the sizing note there)
-DV_BROADCAST_CAP = int(os.environ.get("RUCENE_DV_BCAST_CAP", "4000000"))
+# see the sizing note there). RUCENE_DV_BCAST_CAP overrides it, read at
+# each use like the tombstone cap, so a process that imported this
+# module before setting it still honours it.
+DV_BROADCAST_CAP = 4_000_000
 
 
 def update_doc_values(index_dir: str, col: str, updates: dict,
@@ -191,7 +193,8 @@ def apply_dv_overlay(spark: SparkSession, index_dir: str, df,
     # overlay rows (pre max-seq dedup): free to read and conservative.
     n_ov = sum(storage.parquet_num_rows(os.path.join(dv_dir, f))
                for f in dv_files)
-    bcast = n_ov <= DV_BROADCAST_CAP
+    bcast = n_ov <= int(os.environ.get("RUCENE_DV_BCAST_CAP",
+                                       DV_BROADCAST_CAP))
     from pyspark.sql import Window
     ov = spark.read.parquet(dv_dir)
     if "gen" not in ov.columns:
@@ -783,7 +786,7 @@ class SegmentMerger:
                 # per (field, term) within the merged segment (a term's
                 # blocks are doc-disjoint) and ascending exactly with doc
                 # order — the two properties every consumer needs
-                # (_decode_seg_tds sorts blocks by block_id) — and, unlike
+                # (_SegRows.td sorts blocks by block_id) — and, unlike
                 # the previous rank×max_block_id+1 keying, it does not
                 # grow with merge cascades (stays < docs-per-segment,
                 # int32-safe) and needs no max(block_id) pre-scan.

@@ -49,6 +49,7 @@ doc in a pruned block has total score < θ ≤ the true k-th score), which
 from __future__ import annotations
 
 import os
+import threading
 from functools import reduce
 
 import numpy as np
@@ -105,7 +106,7 @@ def _kp1_64(k1: float) -> float:
 def _collector_seg_reduce(doc, qid, gid, role, sc, g_role, g_nm, g_nf,
                           g_ms, r_nm, r_nf, r_ms, tomb, lucene, ftype, k):
     """Segment-local boolean reduction + top-k for the serving collector
-    (_collector_topk_frame): numpy sort/reduceat mirror of the JVM
+    (_bool_seg_topk): numpy sort/reduceat mirror of the JVM
     two-stage aggregation (stage 1 per (qid, gid, doc); stage 2 folds
     satisfied one-level groups into virtual root clauses; root
     must/filter/not/msm arithmetic; tombstone mask; per-query top-k by
@@ -712,30 +713,162 @@ def _iter_seg_chunks(batches):
                     else pd.concat(buf, ignore_index=True))
 
 
-def _decode_seg_tds(sub: "pd.DataFrame", ti_of: dict) -> dict:
-    """One segment's positional postings rows → per-term decode dict for
-    the phrase/span collector kernels: sorted docs, aligned
-    tfs/nbs/dls, per-block counts/ends and the still-encoded pos_bin
-    blobs (decoded lazily by the kernels' block gathers)."""
-    tds = {}
-    for t, grp in sub.groupby("term", sort=False):
-        grp = grp.sort_values("block_id")
-        counts = grp["num_docs"].to_numpy(np.int64)
-        tds[ti_of[t]] = {
-            "docs": batch_delta_decode(
-                batch_unpack(grp["docs_bin"].tolist(), counts), counts
-            ).astype(np.int64),
-            "tfs": batch_unpack(grp["tfs_bin"].tolist(),
-                                counts).astype(np.int64),
-            "nbs": batch_unpack(grp["norms_bin"].tolist(),
-                                counts).astype(np.int64),
-            "dls": batch_unpack(grp["dls_bin"].tolist(),
-                                counts).astype(np.int64),
-            "counts": counts,
-            "blk_ends": np.cumsum(counts),
-            "pos_bins": grp["pos_bin"].tolist(),
-        }
-    return tds
+def _gather_ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Flat element indices of the ranges
+    ``[starts[i], starts[i] + lens[i])``."""
+    ends = np.cumsum(lens)
+    return (np.repeat(starts, lens) + np.arange(int(ends[-1]) if len(ends)
+                                                else 0)
+            - np.repeat(ends - lens, lens))
+
+
+class _SegRows:
+    """One segment's collector scan rows, decoded ONCE for every query of
+    the pass: docs/tfs for all rows up front, norms/dls on first use, and
+    per-key positional decode dicts (``td``) memoized, so a term shared
+    by a boolean and a positional query — or by two positional queries —
+    is decoded once per segment."""
+
+    def __init__(self, pdf: "pd.DataFrame", kid_of: dict):
+        self.pdf = pdf
+        self.counts = counts = pdf["num_docs"].to_numpy(np.int64)
+        self.starts = np.cumsum(counts) - counts
+        self.kid = np.fromiter(
+            (kid_of[key] for key in zip(pdf["field"], pdf["term"])),
+            dtype=np.int64, count=len(pdf))
+        self.docs = batch_delta_decode(
+            batch_unpack(pdf["docs_bin"].tolist(), counts), counts
+        ).astype(np.int64)
+        self.tfs = batch_unpack(pdf["tfs_bin"].tolist(),
+                                counts).astype(np.int64)
+        self._cols: dict = {}
+        self._tds: dict = {}
+
+    def col(self, name: str) -> np.ndarray:
+        """``norms_bin`` / ``dls_bin`` of every row, decoded on first use."""
+        if name not in self._cols:
+            self._cols[name] = batch_unpack(
+                self.pdf[name].tolist(), self.counts).astype(np.int64)
+        return self._cols[name]
+
+    def td(self, kid: int) -> dict | None:
+        """One key's postings for the phrase/span kernels: sorted docs,
+        aligned tfs/nbs/dls, per-block counts/ends and the still-encoded
+        pos_bin blobs (decoded lazily by the kernels' block gathers);
+        None when the key has no rows in this segment."""
+        if kid not in self._tds:
+            rows = np.flatnonzero(self.kid == kid)
+            td = None
+            if rows.size:
+                rows = rows[np.argsort(
+                    self.pdf["block_id"].to_numpy()[rows], kind="stable")]
+                counts = self.counts[rows]
+                ix = _gather_ranges(self.starts[rows], counts)
+                td = {"docs": self.docs[ix], "tfs": self.tfs[ix],
+                      "nbs": self.col("norms_bin")[ix],
+                      "dls": self.col("dls_bin")[ix],
+                      "counts": counts, "blk_ends": np.cumsum(counts),
+                      "pos_bins": self.pdf["pos_bin"].to_numpy()[rows]
+                      .tolist()}
+            self._tds[kid] = td
+        return self._tds[kid]
+
+
+def _bool_seg_topk(pl: dict, seg: _SegRows, tomb, lucene, ftype, k):
+    """Flattened term/boolean queries of a pass on one segment: expand
+    each scan row once per clause of its key, score with the batch
+    kernel's gather expansion + IEEE op order, then reduce with
+    :func:`_collector_seg_reduce`. Rows keep scan order, so float64
+    sums accumulate exactly as the JVM aggregation does."""
+    rc_all = pl["cl_counts"][seg.kid]
+    rows = np.flatnonzero(rc_all)
+    if rows.size == 0:
+        return None
+    rc = rc_all[rows]
+    n_exp = int(rc.sum())
+    exp_row = np.repeat(rows, rc)
+    cidx = (np.repeat(pl["cl_starts"][seg.kid[rows]], rc) + np.arange(n_exp)
+            - np.repeat(np.cumsum(rc) - rc, rc))
+    lens_e = seg.counts[exp_row]
+    if len(rows) == len(seg.kid) and (rc == 1).all():
+        idx = slice(None)
+    else:
+        idx = _gather_ranges(seg.starts[exp_row], lens_e)
+    tff = seg.tfs[idx].astype(np.float32 if lucene else np.float64)
+    if lucene:
+        nbs = seg.col("norms_bin")[idx]
+        fld_e = pl["fld"][cidx]
+        denom = np.empty(len(tff), dtype=np.float32)
+        for f_ in set(fld_e.tolist()):
+            mm = np.repeat(fld_e == f_, lens_e)
+            denom[mm] = pl["cache_f"][f_][nbs[mm]]
+        sc = (np.repeat(pl["wk32"][cidx], lens_e) * tff) / (tff + denom)
+    else:
+        dls = seg.col("dls_bin")[idx].astype(np.float64)
+        k1_v = np.repeat(pl["k1"][cidx], lens_e)
+        b_v = np.repeat(pl["b"][cidx], lens_e)
+        denom = tff + k1_v * ((1.0 - b_v)
+                              + b_v * dls / np.repeat(pl["avg"][cidx], lens_e))
+        sc = np.repeat(pl["coef"][cidx], lens_e) * tff / denom
+    sc = sc.astype(ftype)
+    scored_e = pl["scored"][cidx]
+    if not scored_e.all():
+        sc[np.repeat(~scored_e, lens_e)] = 0
+    return _collector_seg_reduce(
+        seg.docs[idx], np.repeat(pl["qid"][cidx], lens_e),
+        np.repeat(pl["gid"][cidx], lens_e),
+        np.repeat(pl["role"][cidx], lens_e), sc,
+        pl["g_role"], pl["g_nm"], pl["g_nf"], pl["g_ms"],
+        pl["r_nm"], pl["r_nf"], pl["r_ms"], tomb, lucene, ftype, k)
+
+
+def _dismax_seg_topk(ci_all, seg: _SegRows, tomb, k, lucene, ftype, wk32,
+                     coef, k1_a, b_a, avg_a, flds, cache_f, tie):
+    """Root dismax over unique term disjuncts on one segment
+    (dis_max.rs: score = max(disjuncts) + tie_breaker * Σ(others)):
+    per-disjunct BM25 kernel, max/sum per doc with reduceat in scan
+    order, tombstone mask, top-k. ``ci_all[kid]`` is the disjunct index
+    of a key (-1 for keys of other queries)."""
+    ci_row = ci_all[seg.kid]
+    rows = np.flatnonzero(ci_row >= 0)
+    e_i = np.empty(0, dtype=np.int64)
+    if rows.size == 0:
+        return e_i, np.empty(0, dtype=ftype)
+    counts = seg.counts[rows]
+    ix = _gather_ranges(seg.starts[rows], counts)
+    d_s = seg.docs[ix]
+    ci_el = np.repeat(ci_row[rows], counts)
+    if lucene:
+        nbs = seg.col("norms_bin")[ix]
+        denom = np.empty(len(ci_el), dtype=np.float32)
+        for f_ in set(flds):
+            mm = np.isin(ci_el, [i for i, ff in enumerate(flds) if ff == f_])
+            denom[mm] = cache_f[f_][nbs[mm]]
+        tff = seg.tfs[ix].astype(np.float32)
+        v_s = ((wk32[ci_el] * tff) / (tff + denom)).astype(np.float64)
+    else:
+        dls = seg.col("dls_bin")[ix].astype(np.float64)
+        tff = seg.tfs[ix].astype(np.float64)
+        den = tff + k1_a[ci_el] * (
+            (1.0 - b_a[ci_el]) + b_a[ci_el] * dls / avg_a[ci_el])
+        v_s = coef[ci_el] * tff / den
+    o = np.argsort(d_s, kind="stable")
+    d_s, v_s = d_s[o], v_s[o]
+    nb = np.empty(len(d_s), dtype=bool)
+    nb[0] = True
+    nb[1:] = d_s[1:] != d_s[:-1]
+    starts = np.flatnonzero(nb)
+    du = d_s[starts]
+    mx = np.maximum.reduceat(v_s, starts)
+    sm = np.add.reduceat(v_s, starts)
+    score = (mx + tie * (sm - mx)).astype(ftype)
+    if tomb is not None:
+        pos = np.searchsorted(tomb, du)
+        dead = (pos < len(tomb)) & (
+            tomb[np.minimum(pos, len(tomb) - 1)] == du)
+        du, score = du[~dead], score[~dead]
+    top = np.lexsort((du, -score))[:k]
+    return du[top], score[top]
 
 
 _SCORE_SCHEMA = "seg int, doc long, score float"
@@ -746,6 +879,10 @@ _MAX_CAND_BUCKETS = 4096  # BMW pass-2 candidate-bucket collect cap
 
 
 class IndexSearcher:
+    # guards _tomb_by_seg's memo fill and its session-conf flip (the conf
+    # is session-global, so one lock for every searcher of the process)
+    _tomb_lock = threading.Lock()
+
     def __init__(self, spark: SparkSession, index_dir: str,
                  scoring: str = "lucene",
                  similarity: dict[str, tuple[float, float]] | None = None,
@@ -791,7 +928,7 @@ class IndexSearcher:
         # tasks, and since the Arrow decode is fused into the scan stage,
         # every core beyond 5 idles (measured: local[32] no faster than
         # local[8] on a 1000-query batch); (b) correctness of the
-        # micro-batch collector kernel (_collector_topk_frame), whose
+        # micro-batch collector kernel (_collector_pass), whose
         # segment-local boolean arithmetic and per-segment top-k require
         # each partition to hold a segment's postings COMPLETELY.  Setting
         # openCostInBytes = maxPartitionBytes disables packing (one file
@@ -955,16 +1092,16 @@ class IndexSearcher:
 
     def _segs_single_file(self) -> bool:
         """True iff every committed postings segment dir holds exactly ONE
-        parquet file — the invariant the per-segment collector kernels
-        (search_many's _collector_topk_frame, _phrase_collector_topk)
-        require: their reduce is partition-local and the scan pins one
-        FILE per partition, so a segment split across files would split a
-        doc's clause rows across partitions and corrupt the boolean /
-        phrase arithmetic. Build and merge writers both emit single-file
-        postings; this memoized check (one listdir per segment, through
-        the storage seam, first collector use only) makes legacy
-        multi-file merged segments fall back to the layout-independent
-        JVM aggregation paths instead of returning wrong results.
+        parquet file — the invariant the per-segment collector pass
+        (_collector_pass) requires: its reduce is partition-local and the
+        scan pins one FILE per partition, so a segment split across files
+        would split a doc's clause rows across partitions and corrupt the
+        boolean / phrase arithmetic. Build and merge writers both emit
+        single-file postings; this memoized check (one listdir per
+        segment, through the storage seam, first collector use only)
+        makes legacy multi-file merged segments fall back to the
+        layout-independent JVM aggregation paths instead of returning
+        wrong results.
 
         Segments the manifest marks ``doc_sharded`` are exempt: the
         merger wrote them as doc-range-DISJOINT files (blocks cut at
@@ -1005,30 +1142,35 @@ class IndexSearcher:
         already implies."""
         if self._deleted is None:
             return {}
+        # filled once; readers of a filled memo never take the lock
         if self._tomb_cache is None:
-            # Arrow-batched transfer: at the 4M-row cap a py4j
-            # row-at-a-time collect costs tens of seconds; toPandas
-            # under Arrow moves the two int columns in columnar
-            # batches. The conf flip is runtime-scoped and restored —
-            # sessions that keep Arrow off elsewhere are unaffected.
-            conf = self.spark.conf
-            key = "spark.sql.execution.arrow.pyspark.enabled"
-            prev = conf.get(key, "false")
-            conf.set(key, "true")
-            try:
-                pdf = self._deleted.toPandas()
-            finally:
-                conf.set(key, prev)
-            segs = pdf["seg"].to_numpy(dtype=np.int64)
-            docs = pdf["doc"].to_numpy(dtype=np.int64)
-            order = np.lexsort((docs, segs))
-            segs, docs = segs[order], docs[order]
-            bounds = np.flatnonzero(np.diff(segs)) + 1
-            self._tomb_cache = {
-                int(chunk_segs[0]): np.unique(chunk_docs)
-                for chunk_segs, chunk_docs in zip(
-                    np.split(segs, bounds), np.split(docs, bounds))
-                if chunk_segs.size}
+            with IndexSearcher._tomb_lock:
+                if self._tomb_cache is None:
+                    # Arrow-batched transfer: at the 4M-row cap a py4j
+                    # row-at-a-time collect costs tens of seconds; toPandas
+                    # under Arrow moves the two int columns in columnar
+                    # batches. The conf flip is runtime-scoped and restored
+                    # under the lock, so threads (and searchers) filling at
+                    # once cannot interleave flips and restores and leave the
+                    # session-global conf flipped.
+                    conf = self.spark.conf
+                    key = "spark.sql.execution.arrow.pyspark.enabled"
+                    prev = conf.get(key, "false")
+                    conf.set(key, "true")
+                    try:
+                        pdf = self._deleted.toPandas()
+                    finally:
+                        conf.set(key, prev)
+                    segs = pdf["seg"].to_numpy(dtype=np.int64)
+                    docs = pdf["doc"].to_numpy(dtype=np.int64)
+                    order = np.lexsort((docs, segs))
+                    segs, docs = segs[order], docs[order]
+                    bounds = np.flatnonzero(np.diff(segs)) + 1
+                    self._tomb_cache = {
+                        int(chunk_segs[0]): np.unique(chunk_docs)
+                        for chunk_segs, chunk_docs in zip(
+                            np.split(segs, bounds), np.split(docs, bounds))
+                        if chunk_segs.size}
         return self._tomb_cache
 
     def warmup(self) -> "IndexSearcher":
@@ -1125,73 +1267,23 @@ class IndexSearcher:
         (searcher.rs:696-701) — this caches only the plan: every call
         still executes the full distributed job, so deletes visible to
         THIS searcher (fixed at construction, like a Lucene point-in-time
-        reader) and scores are always freshly computed."""
+        reader) and scores are always freshly computed.
+
+        Routing is :meth:`_route`'s, shared with :meth:`search_many`: a
+        collector-routed query runs the per-segment collector pass as a
+        batch of one (already live-masked, ≤k rows per segment), any
+        other query its Catalyst frame."""
         ck = (repr(query), k)
         hit = self._plan_cache.get(ck)
         if hit is not None:
             return hit
-        q0, b0 = self._fold_boost(query, np.float32(1.0))
-        if (isinstance(q0, PhraseQuery)
-                and (self._deleted is None or self._bcast_deleted)
-                and os.environ.get("RUCENE_PHRASE_COLLECTOR", "1") != "0"
-                and self._segs_single_file()):
-            # root phrase (exact or sloppy): per-segment impact-pruned
-            # collector — live-masked and per-seg top-k'd in the worker
-            frame = self._phrase_collector_topk(q0, b0, k)
-        elif (isinstance(q0, DisjunctionMaxQuery)
-              and os.environ.get("RUCENE_TERM_COLLECTOR", "1") != "0"
-              and self.doc_count >= int(os.environ.get(
-                  "RUCENE_COLLECTOR_MIN_DOCS", "100000"))
-              and (self._deleted is None or self._bcast_deleted)
-              and self._segs_single_file()
-              and all(isinstance(self._fold_boost(d, b0)[0], TermQuery)
-                      for d in q0.disjuncts)
-              and len({(self._fold_boost(d, b0)[0].field,
-                        self._fold_boost(d, b0)[0].term)
-                       for d in q0.disjuncts}) == len(q0.disjuncts)):
-            # root dismax over unique term disjuncts: per-segment
-            # collector (max + tie fold in-worker, ≤k rows per segment)
-            frame = self._dismax_collector_topk(q0, b0, k)
-        elif (isinstance(q0, _SpanQueryT)
-              and os.environ.get("RUCENE_SPAN_COLLECTOR", "1") != "0"
-              and (self._deleted is None or self._bcast_deleted)
-              and self._segs_single_file()):
-            # root span query: per-segment collector with span-count
-            # impact bounds (conjunction + verify + top-k in-worker)
-            frame = self._span_collector_topk(q0, b0, k)
+        route = self._route(query, 0, [0])
+        if route[0] in ("flat", "frame"):
+            frame = self._live(
+                self._frame(query, np.float32(1.0), needs_scores=True))
         else:
-            fs = None
-            # Cost-based routing (the reference picks scorers by cost the
-            # same way, boolean_query.rs BooleanWeight): the collector
-            # kernel is zero-shuffle but pays a fixed mapInPandas setup
-            # (~0.5s measured), while the JVM frame path's shuffle grows
-            # with the corpus. Below the doc threshold the frame path
-            # wins (5k docs: 0.05s vs 0.6s); above it the kernel does
-            # (480k+: it is what closed the serving scaling axis).
-            min_docs = int(os.environ.get(
-                "RUCENE_COLLECTOR_MIN_DOCS", "100000"))
-            if (os.environ.get("RUCENE_TERM_COLLECTOR", "1") != "0"
-                    and self.doc_count >= min_docs
-                    and (self._deleted is None or self._bcast_deleted)
-                    and self._segs_single_file()):
-                fs = self._flat_specs(query, 0, [0])
-            if fs is not None:
-                # flattenable term/boolean query: the same zero-shuffle
-                # per-segment collector kernel a serving micro-batch uses
-                # (_collector_topk_frame), as a batch of one — one scan
-                # task per segment, k rows per segment out, no exchange
-                # before the final tiny merge.  Already live-masked and
-                # score-bit-identical to the _frame path
-                # (tests/test_search_many.py).
-                specs = fs[0]
-                stats = self._stats_for(
-                    [(f_, t) for f_, t, _, _, _ in specs])
-                frame = self._collector_topk_frame(
-                    specs, fs[2], {0: fs}, k, stats
-                ).select("seg", "doc", "score")
-            else:
-                frame = self._live(
-                    self._frame(query, np.float32(1.0), needs_scores=True))
+            frame = self._collector_pass({0: route}, k).select(
+                "seg", "doc", "score")
         topk = frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
         out = (
             self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
@@ -1200,6 +1292,56 @@ class IndexSearcher:
         if len(self._plan_cache) < self._PLAN_CACHE_MAX:
             self._plan_cache[ck] = out
         return out
+
+    def _route(self, q: Query, qid: int, gid_counter: list,
+               batch: bool = False) -> tuple:
+        """The one route decision for :meth:`search` and
+        :meth:`search_many`: ``(kind, payload)`` with kind
+
+        * ``"bool"`` (payload: :meth:`_flat_specs`), ``"phrase"``,
+          ``"span"``, ``"dismax"`` (payload: boost-folded query and
+          boost) — the per-segment collector pass;
+        * ``"flat"`` — a flattenable term/boolean query the collector
+          may not run: the batched JVM aggregation in search_many, the
+          frame in search();
+        * ``"frame"`` — everything else (deeper nesting, non-term
+          dismax, filters, ...).
+
+        The collector needs in-worker tombstones (the set under the
+        RUCENE_TOMB_BCAST_CAP broadcast gate) and one postings file per
+        segment (``_segs_single_file``). Cost-based routing (the
+        reference picks scorers by cost the same way, boolean_query.rs
+        BooleanWeight): a single term-scored query also needs
+        RUCENE_COLLECTOR_MIN_DOCS documents — below it the frame path's
+        small shuffles beat the collector's fixed mapInPandas setup
+        (5k docs: 0.05s vs 0.6s measured). A ``batch`` (search_many)
+        pays that setup once for all its queries, so it skips the
+        gate; positional shapes always skip it, because their frame
+        paths shuffle position rows. Routing never changes results —
+        every route is rank- and score-identical
+        (tests/test_search_many.py)."""
+        on = lambda name: os.environ.get(name, "1") != "0"  # noqa: E731
+        coll = ((self._deleted is None or self._bcast_deleted)
+                and self._segs_single_file())
+        term_ok = (coll and on("RUCENE_TERM_COLLECTOR")
+                   and (batch or self.doc_count >= int(os.environ.get(
+                       "RUCENE_COLLECTOR_MIN_DOCS", "100000"))))
+        fs = self._flat_specs(q, qid, gid_counter)
+        if fs is not None:
+            return ("bool" if term_ok else "flat"), fs
+        q0, b0 = self._fold_boost(q, np.float32(1.0))
+        if coll and isinstance(q0, PhraseQuery) and on(
+                "RUCENE_PHRASE_COLLECTOR"):
+            return "phrase", (q0, b0)
+        if coll and isinstance(q0, _SpanQueryT) and on(
+                "RUCENE_SPAN_COLLECTOR"):
+            return "span", (q0, b0)
+        if term_ok and isinstance(q0, DisjunctionMaxQuery):
+            ds = [self._fold_boost(d, b0)[0] for d in q0.disjuncts]
+            if (all(isinstance(d, TermQuery) for d in ds)
+                    and len({(d.field, d.term) for d in ds}) == len(ds)):
+                return "dismax", (q0, b0)
+        return "frame", None
 
     @staticmethod
     def _fold_boost(q: Query, boost: np.float32):
@@ -1272,12 +1414,6 @@ class IndexSearcher:
         return (specs, (len(q.musts), len(q.filters),
                         q.min_should_match), groups)
 
-    @staticmethod
-    def _int_map(d: dict[int, int]):
-        return F.map_from_arrays(
-            F.array(*[F.lit(int(i)) for i in d]),
-            F.array(*[F.lit(int(v)) for v in d.values()]))
-
     def search_many(self, queries: list[Query], k: int = 10) -> DataFrame:
         """Micro-batch serving: top-k for MANY queries in ONE distributed
         job, returned with a ``qid`` column (the query's index in
@@ -1294,60 +1430,47 @@ class IndexSearcher:
         The batch does NOT become one union branch per query — a
         200-branch union schedules thousands of tiny tasks through the
         driver's single-threaded DAG scheduler, which is exactly the
-        serial floor again. Instead every term/boolean query in the
-        batch is flattened into ONE shared clause table
-        (``_flat_specs``) and executed by the same bit-exact batched
-        kernel a single boolean query uses (``_batch_term_frame``): one
-        term-pruned scan + one Arrow decode for the WHOLE batch, one
-        (qid, seg, doc) aggregation applying each query's
-        must/filter/not/msm arithmetic via literal per-qid maps, then a
-        two-phase top-k — per (qid, seg) first, so no single reducer
-        ever sees more than (k × n_segments) rows per query, then per
-        qid on that reduced set. One level of nested boolean groups
-        rides the same kernel (a second tiny aggregation turns each
-        satisfied group into a virtual root clause). Queries the
-        flattener rejects (phrase/span/dismax/deeper nesting) keep
-        their own rank-identical TakeOrdered branch and union in. Stage
+        serial floor again, and every branch pays its own scan and
+        Python-worker round trip. Instead every query :meth:`_route`
+        sends to the collector — flattened term/boolean queries (one
+        level of nested groups), phrases, spans and term dismaxes — runs
+        in ONE per-segment collector pass (:meth:`_collector_pass`): one
+        term-pruned scan over the union of the batch's terms, one
+        mapInPandas whose worker runs every query's kernel on its rows
+        of each segment, then a per-query window top-k over the
+        (query, segment) top-k rows. Flattenable queries the collector
+        may not run (tombstones above the broadcast cap, legacy
+        multi-file segments, RUCENE_TERM_COLLECTOR=0) share one batched
+        JVM aggregation branch; only the remaining
+        frame-only shapes keep their own TakeOrdered branch. Stage
         count is constant in batch size; rank/score identity vs
         per-query search() is asserted by tests/test_search_many.py."""
         ck = (tuple(repr(q) for q in queries), k, "many")
         hit = self._plan_cache.get(ck)
         if hit is not None:
             return hit
-        flat: dict[int, tuple] = {}
-        others: list[int] = []
         gid_counter = [0]
-        for i, q in enumerate(queries):
-            fs = self._flat_specs(q, i, gid_counter)
-            if fs is not None:
-                flat[i] = fs
-            else:
-                others.append(i)
+        routed = {i: self._route(q, i, gid_counter, batch=True)
+                  for i, q in enumerate(queries)}
+        coll = {i: r for i, r in routed.items()
+                if r[0] not in ("flat", "frame")}
+        flat = {i: r[1] for i, r in routed.items() if r[0] == "flat"}
 
         branches = []
-        if (flat and (self._deleted is None or self._bcast_deleted)
-                and self._segs_single_file()):
-            # per-segment collector kernel: zero-shuffle scoring + boolean
-            # arithmetic + per-(query, segment) top-k inside the worker;
-            # only (n_q × n_seg × k) rows reach the final per-query merge
-            all_specs = [s for specs, _, _ in flat.values()
-                         for s in specs]
-            all_groups = {gtok: g for _, _, groups in flat.values()
-                          for gtok, g in groups.items()}
-            stats = self._stats_for(
-                [(f_, t) for f_, t, _, _, _ in all_specs])
-            coll = self._collector_topk_frame(
-                all_specs, all_groups, flat, k, stats)
+        if coll:
+            # per-(query, segment) top-k from the worker; only
+            # (n_q × n_seg × k) rows reach the final per-query merge
             w2 = Window.partitionBy("_q").orderBy(
                 F.desc("score"), "seg", "doc")
             branches.append(
-                coll.withColumn("_rn", F.row_number().over(w2))
+                self._collector_pass(coll, k)
+                .withColumn("_rn", F.row_number().over(w2))
                 .filter(F.col("_rn") <= k).drop("_rn")
                 .select(F.col("_q").alias("qid"), "seg", "doc", "score"))
-        elif flat:
-            # tombstones above the broadcast gate: keep the JVM
-            # aggregation chain whose _live anti-join shuffles instead of
-            # materializing the tombstone set on the driver
+        if flat:
+            # the layout-independent JVM aggregation chain, whose _live
+            # anti-join shuffles instead of materializing the tombstone
+            # set on the driver
             all_specs = [s for specs, _, _ in flat.values()
                          for s in specs]
             all_groups = {gtok: g for _, _, groups in flat.values()
@@ -1438,39 +1561,11 @@ class IndexSearcher:
                 .filter(F.col("_rn") <= k).drop("_rn")
                 .withColumn("_rn", F.row_number().over(w2))
                 .filter(F.col("_rn") <= k).drop("_rn"))
-        for i in others:
-            qi, bi = self._fold_boost(queries[i], np.float32(1.0))
-            if (isinstance(qi, PhraseQuery)
-                    and (self._deleted is None or self._bcast_deleted)
-                    and os.environ.get(
-                        "RUCENE_PHRASE_COLLECTOR", "1") != "0"
-                    and self._segs_single_file()):
-                # phrases ride the zero-shuffle per-segment collector
-                # (already live-masked + per-seg top-k'd)
-                frame = self._phrase_collector_topk(qi, bi, k)
-            elif (isinstance(qi, _SpanQueryT)
-                    and (self._deleted is None or self._bcast_deleted)
-                    and os.environ.get(
-                        "RUCENE_SPAN_COLLECTOR", "1") != "0"
-                    and self._segs_single_file()):
-                frame = self._span_collector_topk(qi, bi, k)
-            elif (isinstance(qi, DisjunctionMaxQuery)
-                    and (self._deleted is None or self._bcast_deleted)
-                    and os.environ.get(
-                        "RUCENE_TERM_COLLECTOR", "1") != "0"
-                    and self.doc_count >= int(os.environ.get(
-                        "RUCENE_COLLECTOR_MIN_DOCS", "100000"))
-                    and self._segs_single_file()
-                    and all(isinstance(self._fold_boost(d, bi)[0],
-                                       TermQuery) for d in qi.disjuncts)
-                    and len({(self._fold_boost(d, bi)[0].field,
-                              self._fold_boost(d, bi)[0].term)
-                             for d in qi.disjuncts})
-                    == len(qi.disjuncts)):
-                frame = self._dismax_collector_topk(qi, bi, k)
-            else:
-                frame = self._live(self._frame(
-                    queries[i], np.float32(1.0), needs_scores=True))
+        for i, (kind, _) in routed.items():
+            if kind != "frame":
+                continue
+            frame = self._live(self._frame(
+                queries[i], np.float32(1.0), needs_scores=True))
             branches.append(
                 frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
                 .select(F.lit(i).alias("qid"), "seg", "doc", "score"))
@@ -1483,188 +1578,123 @@ class IndexSearcher:
             self._plan_cache[ck] = out
         return out
 
-    def _collector_topk_frame(self, all_specs: list[tuple],
-                              all_groups: dict, flat: dict,
-                              k: int, stats: dict) -> DataFrame:
-        """Per-SEGMENT top-k collector for a flattened serving batch — the
-        reference's per-segment search loop (searcher.rs drives one
-        collector per LeafReader, then merges) re-expressed as one
-        mapInPandas pass with NO shuffle.
+    def _collector_pass(self, routed: dict[int, tuple], k: int) -> DataFrame:
+        """Per-SEGMENT top-k collector for every collector-routed query of
+        a batch — the reference's per-segment search loop (searcher.rs
+        drives one collector per LeafReader, then merges) re-expressed
+        as ONE mapInPandas pass with NO shuffle.
 
         A doc's postings live entirely inside its segment, and the scan is
         partitioned one-segment-per-file (searcher __init__ pins
-        maxPartitionBytes/openCostInBytes), so every (query, doc) boolean
-        reduction — clause sums, must/filter/not counts, msm, one-level
-        group folds — is segment-LOCAL.  The worker therefore folds its
-        whole partition down to k rows per (query, segment) with numpy
-        sort+reduceat, and only (n_queries × n_segments × k) metadata-sized
-        rows ever leave the executors.  This replaces two ~(postings ×
-        clauses)-row shuffles plus a global window sort (measured 12M+
-        shuffled rows for a 200-query batch at 480k docs — the serving
-        scaling ceiling) with zero exchanges before the final tiny merge.
+        maxPartitionBytes/openCostInBytes), so every per-(query, doc)
+        computation — boolean clause sums and must/filter/not/msm
+        arithmetic, phrase and span verification, the dismax fold — is
+        segment-LOCAL. The driver plans each query into picklable kernel
+        arguments plus its (field, term) key set (:meth:`_bool_plan`,
+        :meth:`_phrase_plan`, :meth:`_span_plan`, :meth:`_dismax_plan`);
+        ONE term-pruned scan reads the union of the keys (``pos_bin``
+        only when the batch holds a positional query, and sent to Python
+        only for keys a positional query uses). Per segment the worker
+        decodes the rows once (:class:`_SegRows`) and runs every query's
+        segment kernel on its rows — :func:`_bool_seg_topk` for all
+        flattened booleans together, :func:`_phrase_seg_topk`,
+        :func:`_span_seg_topk`, :func:`_dismax_seg_topk` per query — so
+        only (n_queries × n_segments × k) metadata-sized rows ever leave
+        the executors.
 
         Global top-k correctness: the final (score desc, seg asc, doc asc)
         order restricted to one segment is the segment's own order, so the
         global top-k is a subset of the union of per-segment top-k's.
         Tombstones are masked in-worker (per-seg sorted arrays; only built
-        under the RUCENE_TOMB_BCAST_CAP broadcast gate) BEFORE ranks are assigned, exactly
-        like the anti-join path.  Score arithmetic reuses the gather
-        expansion + IEEE op order of the batch kernel, and stage sums run
-        in scan order via stable lexsort, so scores stay bit-identical to
-        per-query search() (asserted by tests/test_search_many.py).
-        Output: one frame ``_q int, seg, doc, score`` of per-(query,
-        segment) top-k already msm-filtered and live-masked.
-        """
-        by_key: dict[tuple[str, str], list] = {}
-        for field, term, tag, boost, scored in all_specs:
-            self._check_field(field)
-            wk32, idf_64, b64 = self._term_weights(field, term, boost,
-                                                   stats)
-            by_key.setdefault((field, term), []).append(
-                (tag, scored, wk32, idf_64, b64))
-
-        cache_f = self.cache_f
-        scoring = self.scoring
-        lucene = scoring == "lucene"
+        under the RUCENE_TOMB_BCAST_CAP broadcast gate) BEFORE ranks are
+        assigned, exactly like the anti-join path. Each kernel keeps its
+        rows in scan order, so scores stay bit-identical to the frame
+        paths (tests/test_search_many.py, test_phrase_collector.py,
+        test_spans.py). Output: ``_q int, seg, doc, score`` — per-(query,
+        segment) top-k, already msm-filtered and live-masked."""
+        # one stats lookup for the whole batch; the plan halves below
+        # then hit the memo
+        keys = []
+        for kind, p in routed.values():
+            keys += ([(f_, t) for f_, t, _, _, _ in p[0]] if kind == "bool"
+                     else self._collect_terms(p[0]))
+        self._stats_for(keys)
+        plans = []
+        for i, (kind, p) in routed.items():
+            if kind != "bool":
+                planned = getattr(self, f"_{kind}_plan")(*p)
+                if planned is not None:
+                    plans.append((i, kind) + planned)
+        flat = {i: p for i, (kind, p) in routed.items() if kind == "bool"}
+        kid_of: dict[tuple[str, str], int] = {}
+        for specs, _, _ in flat.values():
+            for f_, t, _, _, _ in specs:
+                kid_of.setdefault((f_, t), len(kid_of))
+        for _, _, keys, _ in plans:
+            for key in keys:
+                kid_of.setdefault(key, len(kid_of))
+        schema = f"_q int, seg int, doc long, score {self._score_t}"
+        if not kid_of:
+            return self.spark.createDataFrame([], schema)
+        bool_pl = self._bool_plan(flat, kid_of) if flat else None
+        jobs = []
+        for i, kind, keys, args in plans:
+            by_kid = np.full(len(kid_of), -1, dtype=np.int64)
+            for key, ti in keys.items():
+                by_kid[kid_of[key]] = ti
+            jobs.append((i, kind, by_kid, len(keys), args))
+        lucene = self.scoring == "lucene"
         ftype = np.float32 if lucene else np.float64
-
-        def _parse(tag):
-            qs, gs, rs = tag.split("|")
-            return (int(qs), 0 if gs == "r" else int(gs[1:]),
-                    _ROLE_CODE[rs])
-
-        coef64 = {
-            key: [(tag, scored, np.float32(wk32),
-                   (idf_64 * b64) * _kp1_64(self.sim_f[key[0]][0]),
-                   self.sim_f[key[0]][0], self.sim_f[key[0]][1])
-                  for tag, scored, wk32, idf_64, b64 in specs_]
-            for key, specs_ in by_key.items()
-        }
-        _keys = list(coef64)
-        kid_of = {key: i for i, key in enumerate(_keys)}
-        cl_counts = np.asarray([len(coef64[key]) for key in _keys],
-                               dtype=np.int64)
-        cl_starts = np.cumsum(cl_counts) - cl_counts
-        _flat = [c for key in _keys for c in coef64[key]]
-        parsed = [_parse(c[0]) for c in _flat]
-        qid_cat = np.asarray([p[0] for p in parsed], dtype=np.int32)
-        gid_cat = np.asarray([p[1] for p in parsed], dtype=np.int32)
-        role_cat = np.asarray([p[2] for p in parsed], dtype=np.int8)
-        scored_cat = np.asarray([c[1] for c in _flat], dtype=bool)
-        wk32_cat = np.asarray([c[2] for c in _flat], dtype=np.float32)
-        coef_cat = np.asarray([c[3] for c in _flat], dtype=np.float64)
-        k1_cat = np.asarray([c[4] for c in _flat], dtype=np.float64)
-        b_cat = np.asarray([c[5] for c in _flat], dtype=np.float64)
-        fld_cat = np.asarray(
-            [key[0] for key in _keys for _ in coef64[key]], dtype=object)
-        avg_cat = np.asarray(
-            [self.avgdl64_f[key[0]] for key in _keys
-             for _ in coef64[key]], dtype=np.float64)
-
-        # group metadata indexed by gid (0 = root, unused slot)
-        n_g = max((int(g[1:]) for g in all_groups), default=0)
-        g_role = np.zeros(n_g + 1, dtype=np.int8)
-        g_nm = np.zeros(n_g + 1, dtype=np.int64)
-        g_nf = np.zeros(n_g + 1, dtype=np.int64)
-        g_ms = np.zeros(n_g + 1, dtype=np.int64)
-        for gtok, (prole, _scored, nm_, nf_, ms_) in all_groups.items():
-            gi = int(gtok[1:])
-            g_role[gi] = _ROLE_CODE[prole]
-            g_nm[gi], g_nf[gi], g_ms[gi] = nm_, nf_, ms_
-        # per-query root requirements indexed by qid
-        n_q = max(flat) + 1
-        r_nm = np.zeros(n_q, dtype=np.int64)
-        r_nf = np.zeros(n_q, dtype=np.int64)
-        r_ms = np.zeros(n_q, dtype=np.int64)
-        for i, (_specs, (nm_, nf_, ms_), _groups) in flat.items():
-            r_nm[i], r_nf[i], r_ms[i] = nm_, nf_, ms_
-
         tomb = self._tomb_by_seg()
         k_ = int(k)
-
         # opt-in worker profile: one summary line per mapInPandas call
-        # (decode vs reduce wall/cpu) appended under /tmp/rucene_prof
+        # (kernel wall/cpu) appended under /tmp/rucene_prof
         prof = os.environ.get("RUCENE_COLLECTOR_PROF")
 
         def fn(batches):
             import time as _time
             t_wall0, t_cpu0 = _time.time(), _time.process_time()
-            n_in = n_exp_tot = 0
-            # streamed per segment (see _iter_seg_chunks): decode,
-            # expand, reduce and emit one segment at a time, so worker
+            n_in = 0
+            # streamed per segment (see _iter_seg_chunks): decode, run
+            # the kernels and emit one segment at a time, so worker
             # memory is bounded by one segment's scan rows however many
             # segments _coalesced packs into this task
             for s, pdf in _iter_seg_chunks(batches):
-                n_rows = len(pdf)
-                n_in += n_rows
-                counts = pdf["num_docs"].to_numpy(np.int64)
-                docs = batch_delta_decode(
-                    batch_unpack(pdf["docs_bin"].tolist(), counts), counts
-                ).astype(np.int64)
-                tfs = batch_unpack(pdf["tfs_bin"].tolist(), counts)
-                v_starts = np.cumsum(counts) - counts
-                flds = pdf["field"].tolist()
-                trms = pdf["term"].tolist()
-
-                row_kid = np.fromiter(
-                    (kid_of[(f_, t)] for f_, t in zip(flds, trms)),
-                    dtype=np.int64, count=n_rows)
-                rc = cl_counts[row_kid]
-                n_exp = int(rc.sum())
-                exp_row = np.repeat(np.arange(n_rows), rc)
-                ends_rc = np.cumsum(rc)
-                within = np.arange(n_exp) - np.repeat(ends_rc - rc, rc)
-                cidx = np.repeat(cl_starts[row_kid], rc) + within
-                identity = bool((rc == 1).all())
-                lens_e = counts[exp_row]
-                out_total = int(lens_e.sum())
-                if identity:
-                    idx = slice(None)
-                else:
-                    ends_e = np.cumsum(lens_e)
-                    idx = (np.repeat(v_starts[exp_row], lens_e)
-                           + np.arange(out_total)
-                           - np.repeat(ends_e - lens_e, lens_e))
-
-                tf_out = tfs[idx]
-                fld_e = fld_cat[cidx]
-                scored_e = scored_cat[cidx]
-                if lucene:
-                    nbs = batch_unpack(pdf["norms_bin"].tolist(), counts
-                                       ).astype(np.int64)[idx]
-                    denom = np.empty(out_total, dtype=np.float32)
-                    for f_ in set(fld_e.tolist()):
-                        mm = np.repeat(fld_e == f_, lens_e)
-                        denom[mm] = cache_f[f_][nbs[mm]]
-                    wk_v = np.repeat(wk32_cat[cidx], lens_e)
-                    tff = tf_out.astype(np.float32)
-                    sc = (wk_v * tff) / (tff + denom)
-                else:
-                    dls = batch_unpack(pdf["dls_bin"].tolist(), counts
-                                       ).astype(np.float64)[idx]
-                    avg_v = np.repeat(avg_cat[cidx], lens_e)
-                    coef_v = np.repeat(coef_cat[cidx], lens_e)
-                    k1_v = np.repeat(k1_cat[cidx], lens_e)
-                    b_v = np.repeat(b_cat[cidx], lens_e)
-                    tff = tf_out.astype(np.float64)
-                    denom = tff + k1_v * ((1.0 - b_v) + b_v * dls / avg_v)
-                    sc = coef_v * tff / denom
-                sc = sc.astype(ftype)
-                if not scored_e.all():
-                    sc[np.repeat(~scored_e, lens_e)] = 0
-                doc_a = docs[idx] if not identity else docs
-                n_exp_tot += len(doc_a)
-                q3, d3, s3 = _collector_seg_reduce(
-                    doc_a,
-                    np.repeat(qid_cat[cidx], lens_e),
-                    np.repeat(gid_cat[cidx], lens_e),
-                    np.repeat(role_cat[cidx], lens_e),
-                    sc, g_role, g_nm, g_nf, g_ms,
-                    r_nm, r_nf, r_ms, tomb.get(int(s)), lucene, ftype, k_)
+                n_in += len(pdf)
+                seg = _SegRows(pdf, kid_of)
+                tb = tomb.get(int(s))
+                parts = []
+                if bool_pl is not None:
+                    r = _bool_seg_topk(bool_pl, seg, tb, lucene, ftype, k_)
+                    if r is not None:
+                        parts.append(r)
+                for i, kind, by_kid, n_keys, args in jobs:
+                    if kind == "dismax":
+                        dv, sv = _dismax_seg_topk(by_kid, seg, tb, k_,
+                                                  lucene, ftype, **args)
+                    else:
+                        tds = {}
+                        for kid in np.flatnonzero(by_kid >= 0):
+                            td = seg.td(int(kid))
+                            if td is not None:
+                                tds[int(by_kid[kid])] = td
+                        if kind == "phrase":
+                            if len(tds) < n_keys:
+                                continue
+                            dv, sv = _phrase_seg_topk(
+                                tds, tomb=tb, k=k_, lucene=lucene, **args)
+                        else:
+                            dv, sv = _span_seg_topk(
+                                tds, tomb=tb, k=k_, lucene=lucene, **args)
+                    parts.append((np.full(len(dv), i, dtype=np.int32),
+                                  dv, sv.astype(ftype)))
+                if not parts:
+                    continue
+                q3, d3, s3 = (np.concatenate(c) for c in zip(*parts))
                 if len(q3) == 0:
                     continue
                 yield pd.DataFrame({
-                    "_q": q3,
+                    "_q": q3.astype(np.int32),
                     "seg": np.full(len(q3), s, dtype=np.int32),
                     "doc": d3,
                     "score": s3,
@@ -1675,21 +1705,90 @@ class IndexSearcher:
                     fh.write(
                         f"wall={_time.time() - t_wall0:.3f}"
                         f" cpu={_time.process_time() - t_cpu0:.3f}"
-                        f" rows={n_in} exp={n_exp_tot}\n")
+                        f" rows={n_in}\n")
 
-        by_field: dict[str, list[str]] = {}
-        for f_, t in by_key:
-            by_field.setdefault(f_, []).append(t)
-        cond = reduce(
-            lambda a, b: a | b,
-            [(F.col("field") == f_) & F.col("term").isin(ts)
-             for f_, ts in by_field.items()],
-        )
-        scan = self._postings.filter(cond).select(
-            "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
-            "norms_bin", "dls_bin")
-        return self._coalesced(scan).mapInPandas(
-            fn, f"_q int, seg int, doc long, score {self._score_t}")
+        def key_cond(keys):
+            by_field: dict[str, list[str]] = {}
+            for f_, t in keys:
+                by_field.setdefault(f_, []).append(t)
+            return reduce(lambda a, b: a | b,
+                          [(F.col("field") == f_) & F.col("term").isin(ts)
+                           for f_, ts in by_field.items()])
+
+        cols = ["field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
+                "norms_bin", "dls_bin"]
+        pos_keys = {key for _, kind, keys, _ in plans if kind != "dismax"
+                    for key in keys}
+        if pos_keys:
+            cols += ["block_id", F.when(key_cond(pos_keys), F.col("pos_bin"))
+                     .alias("pos_bin")]
+        scan = self._postings.filter(key_cond(kid_of)).select(*cols)
+        return self._coalesced(scan).mapInPandas(fn, schema)
+
+    def _bool_plan(self, flat: dict, kid_of: dict) -> dict:
+        """Plan half of the boolean collector for every flattened query of
+        a pass (``flat[qid]`` = :meth:`_flat_specs`): per-clause scoring
+        constants laid out per key id (``cl_starts``/``cl_counts`` index
+        a key's clauses), the per-group and per-query
+        must/filter/msm requirement tables :func:`_collector_seg_reduce`
+        reads."""
+        stats = self._stats_for([(f_, t) for specs, _, _ in flat.values()
+                                 for f_, t, _, _, _ in specs])
+        by_key: dict[tuple[str, str], list] = {}
+        for specs, _, _ in flat.values():
+            for field, term, tag, boost, scored in specs:
+                self._check_field(field)
+                by_key.setdefault((field, term), []).append(
+                    (tag, scored) + self._term_weights(field, term, boost,
+                                                       stats))
+        keys = sorted(by_key, key=kid_of.__getitem__)
+        kids = np.asarray([kid_of[key] for key in keys], dtype=np.int64)
+        cnts = np.asarray([len(by_key[key]) for key in keys], dtype=np.int64)
+        cl_counts = np.zeros(len(kid_of), dtype=np.int64)
+        cl_starts = np.zeros(len(kid_of), dtype=np.int64)
+        cl_counts[kids] = cnts
+        cl_starts[kids] = np.cumsum(cnts) - cnts
+        cl = [(key,) + c for key in keys for c in by_key[key]]
+        tags = [c[1].split("|") for c in cl]
+        pl = {
+            "cl_counts": cl_counts, "cl_starts": cl_starts,
+            "qid": np.asarray([int(t[0]) for t in tags], dtype=np.int32),
+            "gid": np.asarray([0 if t[1] == "r" else int(t[1][1:])
+                               for t in tags], dtype=np.int32),
+            "role": np.asarray([_ROLE_CODE[t[2]] for t in tags],
+                               dtype=np.int8),
+            "scored": np.asarray([c[2] for c in cl], dtype=bool),
+            "wk32": np.asarray([c[3] for c in cl], dtype=np.float32),
+            "coef": np.asarray(
+                [(c[4] * c[5]) * _kp1_64(self.sim_f[c[0][0]][0])
+                 for c in cl], dtype=np.float64),
+            "k1": np.asarray([self.sim_f[c[0][0]][0] for c in cl],
+                             dtype=np.float64),
+            "b": np.asarray([self.sim_f[c[0][0]][1] for c in cl],
+                            dtype=np.float64),
+            "avg": np.asarray([self.avgdl64_f[c[0][0]] for c in cl],
+                              dtype=np.float64),
+            "fld": np.asarray([c[0][0] for c in cl], dtype=object),
+            "cache_f": {f_: self.cache_f[f_] for f_, _ in keys},
+        }
+        # group metadata indexed by gid (0 = root, unused slot) and
+        # per-query root requirements indexed by qid
+        groups = {gtok: g for _, _, gs in flat.values()
+                  for gtok, g in gs.items()}
+        n_g = max((int(g[1:]) for g in groups), default=0) + 1
+        for name, dt in (("g_role", np.int8), ("g_nm", np.int64),
+                         ("g_nf", np.int64), ("g_ms", np.int64)):
+            pl[name] = np.zeros(n_g, dtype=dt)
+        for gtok, (prole, _scored, nm_, nf_, ms_) in groups.items():
+            gi = int(gtok[1:])
+            pl["g_role"][gi] = _ROLE_CODE[prole]
+            pl["g_nm"][gi], pl["g_nf"][gi], pl["g_ms"][gi] = nm_, nf_, ms_
+        n_q = max(flat) + 1
+        for name in ("r_nm", "r_nf", "r_ms"):
+            pl[name] = np.zeros(n_q, dtype=np.int64)
+        for i, (_specs, (nm_, nf_, ms_), _groups) in flat.items():
+            pl["r_nm"][i], pl["r_nf"][i], pl["r_ms"][i] = nm_, nf_, ms_
+        return pl
 
     def search_with_timeout(self, query: Query, k: int = 10,
                             timeout_s: float = 30.0) -> list:
@@ -2196,7 +2295,7 @@ class IndexSearcher:
         θ_s = 0 (fewer than k driver postings) makes thr negative and
         every test above vacuous — the pass degrades to exhaustive
         scoring, mirroring the multi-job path's ``theta > 0`` guard.
-        Scores: per-term kernel identical to _collector_topk_frame
+        Scores: per-term kernel identical to _bool_seg_topk
         (float32 in "lucene" mode), per-doc sum in float64, cast to the
         score type — rank- and score-identical to the exhaustive
         disjunction (tests/test_blockmax.py runs both routes)."""
@@ -2360,26 +2459,19 @@ class IndexSearcher:
             .orderBy(F.desc("score"), "seg", "doc")
         )
 
-    def _dismax_collector_topk(self, q: "DisjunctionMaxQuery",
-                               boost: np.float32, k: int) -> DataFrame:
-        """Zero-shuffle DisjunctionMax top-k — the per-segment collector
-        kernel specialized to the dismax fold (dis_max.rs: score =
-        max(disjuncts) + tie_breaker * Σ(others)). One scan pass over
-        the disjunct terms' postings; per segment the worker decodes,
-        scores each disjunct with the shared BM25 kernel, reduces
-        max/sum per doc with reduceat, masks tombstones, and emits ≤k
-        rows. Requires all-TermQuery disjuncts with unique (field, term)
-        — the same precondition as the exhaustive path's one-scan fast
-        path — and is score-identical to it (per-term float32 kernel,
-        float64 fold, cast to the score type)."""
+    def _dismax_plan(self, q: "DisjunctionMaxQuery", boost: np.float32):
+        """Plan half of the dismax collector (:func:`_dismax_seg_topk`):
+        (keys → disjunct index, kernel arguments). Requires all-TermQuery
+        disjuncts with unique (field, term) — the same precondition as
+        the exhaustive path's one-scan fast path — and is score-identical
+        to it (per-term float32 kernel, float64 fold, cast to the score
+        type)."""
         specs = []
         for d in q.disjuncts:
             d, db = self._fold_boost(d, boost)
             specs.append((d.field, d.term,
                           float(np.float32(db * np.float32(d.boost)))))
         stats = self._stats_for([(f_, t) for f_, t, _ in specs])
-        lucene = self.scoring == "lucene"
-        ftype = np.float32 if lucene else np.float64
         n_c = len(specs)
         wk32 = np.zeros(n_c, dtype=np.float32)
         coef = np.zeros(n_c, dtype=np.float64)
@@ -2398,84 +2490,10 @@ class IndexSearcher:
             avg_a[i] = self.avgdl64_f[f_]
             flds.append(f_)
             ci_of[(f_, t)] = i
-        cache_f = self.cache_f
-        tie = float(q.tie_breaker)
-        tomb = self._tomb_by_seg()
-        k_ = int(k)
-
-        def fn(batches):
-            # streamed per segment (see _iter_seg_chunks): bounded memory
-            for s, sub in _iter_seg_chunks(batches):
-                counts = sub["num_docs"].to_numpy(np.int64)
-                d_s = batch_delta_decode(
-                    batch_unpack(sub["docs_bin"].tolist(), counts),
-                    counts).astype(np.int64)
-                tfs = batch_unpack(sub["tfs_bin"].tolist(), counts)
-                ci_row = np.fromiter(
-                    (ci_of[(f_, t)] for f_, t
-                     in zip(sub["field"], sub["term"])),
-                    dtype=np.int64, count=len(sub))
-                ci_el = np.repeat(ci_row, counts)
-                if lucene:
-                    nbs = batch_unpack(sub["norms_bin"].tolist(), counts
-                                       ).astype(np.int64)
-                    denom = np.empty(len(ci_el), dtype=np.float32)
-                    for f_ in set(flds):
-                        mm = np.isin(
-                            ci_el, [i for i, ff in enumerate(flds)
-                                    if ff == f_])
-                        denom[mm] = cache_f[f_][nbs[mm]]
-                    tff = tfs.astype(np.float32)
-                    v_s = ((wk32[ci_el] * tff) / (tff + denom)
-                           ).astype(np.float64)
-                else:
-                    dls = batch_unpack(sub["dls_bin"].tolist(), counts
-                                       ).astype(np.float64)
-                    tff = tfs.astype(np.float64)
-                    den = tff + k1_a[ci_el] * (
-                        (1.0 - b_a[ci_el])
-                        + b_a[ci_el] * dls / avg_a[ci_el])
-                    v_s = coef[ci_el] * tff / den
-                o = np.argsort(d_s, kind="stable")
-                d_s, v_s = d_s[o], v_s[o]
-                if len(d_s) == 0:
-                    continue
-                nb = np.empty(len(d_s), dtype=bool)
-                nb[0] = True
-                nb[1:] = d_s[1:] != d_s[:-1]
-                starts = np.flatnonzero(nb)
-                du = d_s[starts]
-                mx = np.maximum.reduceat(v_s, starts)
-                sm = np.add.reduceat(v_s, starts)
-                score = (mx + tie * (sm - mx)).astype(ftype)
-                tb = tomb.get(int(s))
-                if tb is not None and len(du):
-                    pos = np.searchsorted(tb, du)
-                    dead = (pos < len(tb)) & (
-                        tb[np.minimum(pos, len(tb) - 1)] == du)
-                    du, score = du[~dead], score[~dead]
-                if len(du) == 0:
-                    continue
-                top = np.lexsort((du, -score))[:k_]
-                yield pd.DataFrame({
-                    "seg": np.full(len(top), s, dtype=np.int32),
-                    "doc": du[top],
-                    "score": score[top],
-                })
-
-        by_field: dict[str, list[str]] = {}
-        for f_, t, _ in specs:
-            by_field.setdefault(f_, []).append(t)
-        cond = reduce(
-            lambda a, b: a | b,
-            [(F.col("field") == f_) & F.col("term").isin(ts)
-             for f_, ts in by_field.items()],
-        )
-        scan = self._postings.filter(cond).select(
-            "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
-            "norms_bin", "dls_bin")
-        return self._coalesced(scan).mapInPandas(
-            fn, f"seg int, doc long, score {self._score_t}")
+        return ci_of, dict(
+            wk32=wk32, coef=coef, k1_a=k1_a, b_a=b_a, avg_a=avg_a,
+            flds=flds, cache_f={f_: self.cache_f[f_] for f_ in set(flds)},
+            tie=float(q.tie_breaker))
 
     # ------------------------------------------------------------------
     # explain
@@ -3363,38 +3381,35 @@ class IndexSearcher:
             " positions array<long>",
         )
 
-    def _phrase_collector_topk(self, q: PhraseQuery, boost: np.float32,
-                               k: int) -> DataFrame:
-        """Zero-shuffle exact-phrase top-k — the per-segment collector
-        kernel (see _collector_topk_frame) extended to phrases, with
-        impact-ordered verification (_phrase_seg_topk).
+    def _phrase_plan(self, q: PhraseQuery, boost: np.float32):
+        """Plan half of the phrase collector (:func:`_phrase_seg_topk`,
+        impact-ordered verification): (keys → slot term index, kernel
+        arguments), or None when a term is absent (no doc can match).
 
         The exhaustive exact path (_phrase_frame, slop=0) shuffles one
         position-array row per (candidate doc, term) into a (seg, doc)
         groupBy — corpus-sized for a stopword phrase (51.7s at 1M docs,
-        BENCH_1M.json q_stopword_phrase).  Here each worker holds a whole
-        segment's postings for the phrase terms (the searcher pins
-        one-segment-file-per-partition), so conjunction, the min-tf
-        score upper bound, ub-ordered position verification, tombstone
-        masking and the per-segment top-k all happen in numpy inside the
-        scan stage; only ≤ k rows per segment ever leave the executors,
-        and pos_bin blocks that cannot beat θ are never varint-decoded.
-        Used only where per-seg top-k is sound: a ROOT exact phrase going
-        straight to the collector (search()), never as a boolean clause.
+        BENCH_1M.json q_stopword_phrase).  In the collector pass each
+        worker holds a whole segment's postings for the phrase terms, so
+        conjunction, the min-tf score upper bound, ub-ordered position
+        verification, tombstone masking and the per-segment top-k all
+        happen in numpy inside the scan stage, and pos_bin blocks that
+        cannot beat θ are never varint-decoded. Used only for ROOT
+        phrases, where per-seg top-k is sound, never as a boolean clause.
         Scores are bit-identical to _phrase_frame (same float32 kernel,
         same freq) — asserted by tests/test_phrase_collector.py.
 
         Sloppy phrases (slop > 0) ride the same kernel with the bound
         Σ_slots tf − n_slots + 1 (every _SloppyFreq iteration consumes
         one position advance and emits ≤1 match of weight ≤1) and the
-        shared sloppy verify — batch-vectorized for two distinct terms,
+        shared sloppy verify — batch-vectorized for distinct terms,
         per-doc heap walk behind the same candidate cap as the
         exhaustive path otherwise."""
         self._check_field(q.field)
         self._check_positions(q.field)
         stats = self._stats_for([(q.field, t) for t in set(q.terms)])
         if any((q.field, t) not in stats for t in q.terms):
-            return self.spark.createDataFrame([], self._score_schema)
+            return None
         if q.slop > 0 and len(set(q.terms)) != len(q.terms):
             # repeated-term sloppy shapes verify per-doc in Python
             # (repeat groups): same candidate cap as the exhaustive
@@ -3448,62 +3463,25 @@ class IndexSearcher:
         ti_of = {t: i for i, t in enumerate(uniq_terms)}
         slots = [(ti_of[t], p) for t, p, _ in new_slots]
         offsets = [p for _, p, _ in new_slots]
-        slop_ = int(q.slop)
-        terms_ = list(q.terms)
-        n_uniq = len(uniq_terms)
-        cache = self.cache_f[q.field]
-        avgdl64 = self.avgdl64_f[q.field]
-        lucene = self.scoring == "lucene"
-        tomb = self._tomb_by_seg()
-        k_ = int(k)
-        chunk0 = int(os.environ.get("RUCENE_PHRASE_CHUNK", "4096"))
-        term_ti = ti_of
+        keys = {(q.field + (BIGRAM_SUFFIX if isp else ""), t): ti_of[t]
+                for t, _, isp in new_slots}
+        return keys, dict(
+            slots=slots, offsets=offsets,
+            chunk0=int(os.environ.get("RUCENE_PHRASE_CHUNK", "4096")),
+            wk32=wk32, cache=self.cache_f[q.field], coef64=coef64, k1_=k1_,
+            b_=b_, avgdl64=self.avgdl64_f[q.field], slop=int(q.slop),
+            terms=list(q.terms))
 
-        def fn(batches):
-            # streamed per segment — peak memory is one segment's rows
-            # no matter how many segments _coalesced packs in
-            for s, sub in _iter_seg_chunks(batches):
-                tds = _decode_seg_tds(sub, term_ti)
-                if len(tds) < n_uniq:
-                    continue
-                dv, sv = _phrase_seg_topk(
-                    tds, slots, offsets, tomb.get(int(s)), k_, chunk0,
-                    lucene, wk32, cache, coef64, k1_, b_, avgdl64,
-                    slop=slop_, terms=terms_)
-                if len(dv) == 0:
-                    continue
-                yield pd.DataFrame({
-                    "seg": np.full(len(dv), s, dtype=np.int32),
-                    "doc": dv,
-                    "score": sv,
-                })
-
-        conds = []
-        if base_terms:
-            conds.append((F.col("field") == q.field)
-                         & F.col("term").isin(base_terms))
-        if pair_terms:
-            conds.append((F.col("field") == q.field + BIGRAM_SUFFIX)
-                         & F.col("term").isin(pair_terms))
-        scan = self._postings.filter(
-            reduce(lambda a, b: a | b, conds)
-        ).select("term", "seg", "block_id", "num_docs", "docs_bin",
-                 "tfs_bin", "norms_bin", "dls_bin", "pos_bin")
-        return self._coalesced(scan).mapInPandas(
-            fn, f"seg int, doc long, score {self._score_t}")
-
-    def _span_collector_topk(self, q, boost: np.float32,
-                             k: int) -> DataFrame:
-        """Zero-shuffle span top-k — the per-segment collector kernel
-        extended to the span family (_span_seg_topk). The exhaustive
-        _span_frame shuffles one positions row per (candidate doc, term)
-        into a corpus-sized (seg, doc) groupBy before verifying; here
-        conjunction, the span-count impact bound, ub-ordered
-        verification, tombstone masking and the per-segment top-k all
-        run in numpy inside the scan stage — only ≤k rows per segment
-        leave the executors, and pos_bin blocks no surviving candidate
-        lands in are never decoded. Used only for ROOT span queries
-        (search()), where per-segment top-k is sound. Scores are
+    def _span_plan(self, q, boost: np.float32):
+        """Plan half of the span collector (:func:`_span_seg_topk`):
+        (keys → term index, kernel arguments). The exhaustive _span_frame
+        shuffles one positions row per (candidate doc, term) into a
+        corpus-sized (seg, doc) groupBy before verifying; in the
+        collector pass conjunction, the span-count impact bound,
+        ub-ordered verification, tombstone masking and the per-segment
+        top-k all run in numpy inside the scan stage, and pos_bin blocks
+        no surviving candidate lands in are never decoded. Used only for
+        ROOT span queries, where per-segment top-k is sound. Scores are
         identical to _span_frame (same float32 span-freq kernels,
         tests/test_spans.py cross-route assertions)."""
         from .query import (
@@ -3566,36 +3544,12 @@ class IndexSearcher:
         tb2 = spec[1][1][1] if fast2 else -1
         slop2 = spec[2] if fast2 else 0
 
-        cache = self.cache_f[field]
-        avgdl64 = self.avgdl64_f[field]
-        lucene = self.scoring == "lucene"
-        tomb = self._tomb_by_seg()
-        k_ = int(k)
-        chunk0 = int(os.environ.get("RUCENE_PHRASE_CHUNK", "4096"))
-        ti_map = ti_of
-
-        def fn(batches):
-            # streamed per segment (see _iter_seg_chunks): bounded memory
-            for s, sub in _iter_seg_chunks(batches):
-                tds = _decode_seg_tds(sub, ti_map)
-                dv, sv = _span_seg_topk(
-                    tds, spec, group_tis, tomb.get(int(s)), k_, chunk0,
-                    lucene, wk32, cache, coef64, k1_, b_, avgdl64,
-                    fast2, ta2, tb2, slop2, fastn)
-                if len(dv) == 0:
-                    continue
-                yield pd.DataFrame({
-                    "seg": np.full(len(dv), s, dtype=np.int32),
-                    "doc": dv,
-                    "score": sv,
-                })
-
-        scan = self._postings.filter(
-            (F.col("field") == field) & F.col("term").isin(uniq_terms)
-        ).select("term", "seg", "block_id", "num_docs", "docs_bin",
-                 "tfs_bin", "norms_bin", "dls_bin", "pos_bin")
-        return self._coalesced(scan).mapInPandas(
-            fn, f"seg int, doc long, score {self._score_t}")
+        return {(field, t): ti for t, ti in ti_of.items()}, dict(
+            spec=spec, group_tis=group_tis,
+            chunk0=int(os.environ.get("RUCENE_PHRASE_CHUNK", "4096")),
+            wk32=wk32, cache=self.cache_f[field], coef64=coef64, k1_=k1_,
+            b_=b_, avgdl64=self.avgdl64_f[field], fast2=fast2, ta2=ta2,
+            tb2=tb2, slop2=slop2, fastn=fastn)
 
     def _phrase_frame(self, q: PhraseQuery, boost: np.float32, stats: dict) -> DataFrame:
         """ONE postings scan for all phrase terms (``term IN (...)`` pushed

@@ -358,3 +358,33 @@ def test_dv_overlay_broadcast_capped(spark, tmp_path_factory, monkeypatch):
                        (5, 1)]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_dv_overlay_cap_env_read_at_use(spark, tmp_path_factory,
+                                        monkeypatch):
+    """RUCENE_DV_BCAST_CAP is read when a searcher applies the overlay,
+    not when rucene_spark.merge is imported: setting it after the import
+    still flips the overlay join from broadcast to shuffle."""
+    import rucene_spark.merge  # noqa: F401  (imported before the env flip)
+    from rucene_spark.build import IndexWriter
+    from rucene_spark.merge import update_doc_values
+    from rucene_spark.search import IndexSearcher
+
+    rows = [(i, f"common t{i:03d}", 100 + i) for i in range(4)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, rank long")
+    d = str(tmp_path_factory.mktemp("dvu_env_idx"))
+    IndexWriter(spark, d, n_segments=2, key_col="doc_id",
+                partitioner="range").build(df)
+    update_doc_values(d, "rank", {0: 999.0, 3: 1.0})
+
+    def plan_of(searcher):
+        return searcher._docmeta._jdf.queryExecution().executedPlan().toString()
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert "BroadcastHashJoin" in plan_of(IndexSearcher(spark, d))
+        monkeypatch.setenv("RUCENE_DV_BCAST_CAP", "1")
+        assert "BroadcastHashJoin" not in plan_of(IndexSearcher(spark, d))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

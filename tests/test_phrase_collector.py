@@ -1,8 +1,8 @@
 """The per-segment exact-phrase collector (impact-ordered verification,
-search.py _phrase_collector_topk) must be rank- AND score-identical to
-the exhaustive JVM exact-phrase path (_phrase_frame) — pruning is
-correctness-neutral by construction, and unlike block-max WAND the
-reference has no phrase-impacts analogue to diff against
+search.py _phrase_plan + _phrase_seg_topk) must be rank- AND
+score-identical to the exhaustive JVM exact-phrase path (_phrase_frame)
+— pruning is correctness-neutral by construction, and unlike block-max
+WAND the reference has no phrase-impacts analogue to diff against
 (phrase_query.rs:223-270 bails only via two-phase match_cost), so this
 suite IS the gate that keeps it so."""
 
@@ -25,8 +25,8 @@ K1, B = 1.2, 0.75
 
 def _make_tds(n_docs, n_terms, block=128, tfcap=10, seed=0):
     """Synthetic one-segment postings in the exact per-term structure
-    _phrase_collector_topk's worker builds (block-packed pos_bin via the
-    real codec), plus the uncompressed truth for the brute oracle."""
+    the collector pass builds per key (_SegRows.td; block-packed pos_bin
+    via the real codec), plus the uncompressed truth for the brute oracle."""
     r = np.random.default_rng(seed)
     texts = [list(r.integers(0, n_terms + 3, size=r.integers(3, 40)))
              for _ in range(n_docs)]

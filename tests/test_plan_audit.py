@@ -14,7 +14,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from rucene_spark.build import IndexWriter
-from rucene_spark.query import QueryStringQueryBuilder, TermQuery
+from rucene_spark.query import (
+    DisjunctionMaxQuery,
+    PhraseQuery,
+    QueryStringQueryBuilder,
+    SpanNearQuery,
+    SpanTermQuery,
+    TermQuery,
+)
 from rucene_spark.search import IndexSearcher
 from rucene_spark.webtext import make_corpus
 
@@ -59,6 +66,54 @@ def test_topk_join_is_broadcast(searcher):
     out = searcher.search(TermQuery("text", "t000000"), 10)
     plan = _physical_plan(out)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def _postings_read_schemas(spark, df) -> tuple[str, list[str]]:
+    """Executed plan and its postings-scan ReadSchemas, untruncated."""
+    import re
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        plan = _physical_plan(df)
+    finally:
+        spark.conf.set(key, prev)
+    return plan, [m for m in re.findall(r"ReadSchema: ([^\n]*)", plan)
+                  if "docs_bin" in m]
+
+
+def test_mixed_batch_is_one_collector_pass(spark, searcher):
+    """search_many runs every collector-routed query — booleans, phrases,
+    spans, dismax — in ONE Python map over one postings scan: no
+    per-query branch, so no per-query TakeOrderedAndProject."""
+    qs = QueryStringQueryBuilder("t000000 +t000001", [("text", 1.0)])
+    batch = [
+        TermQuery("text", "t000000"),
+        qs.build(),
+        PhraseQuery.build("text", ["t000000", "t000001"], slop=1),
+        SpanNearQuery([SpanTermQuery("text", "t000002"),
+                       SpanTermQuery("text", "t000000")], slop=2,
+                      in_order=True),
+        DisjunctionMaxQuery([TermQuery("text", "t000001"),
+                             TermQuery("text", "t000003")], 0.2),
+    ]
+    plan, schemas = _postings_read_schemas(
+        spark, searcher.search_many(batch, 5))
+    assert plan.count("MapInPandas") == 1, plan
+    assert "TakeOrderedAndProject" not in plan, plan
+    assert len(schemas) == 1 and "pos_bin" in schemas[0], schemas
+
+
+def test_term_batch_scan_excludes_positions(spark, searcher):
+    """A batch without positional queries must not read pos_bin."""
+    batch = [TermQuery("text", "t000000"),
+             QueryStringQueryBuilder("t000001 t000002",
+                                     [("text", 1.0)]).build()]
+    plan, schemas = _postings_read_schemas(
+        spark, searcher.search_many(batch, 5))
+    assert plan.count("MapInPandas") == 1, plan
+    assert len(schemas) == 1 and "tfs_bin" in schemas[0], schemas
+    assert "pos_bin" not in schemas[0], schemas
 
 
 def test_blockmax_pass2_filter_reaches_scan(searcher):

@@ -2,6 +2,7 @@
 to per-query search() for every query in the batch (one distributed job
 replaces N dispatches; semantics unchanged)."""
 
+import numpy as np
 import pytest
 
 from rucene_spark.build import IndexWriter
@@ -10,6 +11,8 @@ from rucene_spark.query import (
     DisjunctionMaxQuery,
     PhraseQuery,
     QueryStringQueryBuilder,
+    SpanNearQuery,
+    SpanTermQuery,
     TermQuery,
 )
 from rucene_spark.search import IndexSearcher
@@ -275,3 +278,74 @@ def test_collector_seg_reduce_all_groups_unsatisfied():
         g_role, g_nm, g_nf, g_ms, r_nm, r_nf, r_ms, None, True,
         np.float32, 10)
     assert list(d3) == [5] and s3[0] == np.float32(0.75)
+
+
+def _bits(rows):
+    """(doc_id, float32 score bits) — exact score identity, no rounding."""
+    return [(r["doc_id"], int(np.float32(r["score"]).view(np.uint32)))
+            for r in rows]
+
+
+def _mixed_batch():
+    def qs(s):
+        return QueryStringQueryBuilder(s, [("text", 1.0)]).build()
+
+    sloppy = PhraseQuery.build("text", ["key", "agg"], slop=2)
+    return [
+        TermQuery("text", "table"),                        # flat
+        qs("table +query"),                                # flat boolean
+        qs("+table (query scan^2)"),                       # nested group
+        qs("(table query) +(scan key)"),                   # nested groups
+        PhraseQuery.build("text", ["key", "agg"], slop=0),  # "a b"~0
+        sloppy,                                            # "a b"~2
+        PhraseQuery.build("text", ["table", "query", "scan"], slop=3),
+        SpanNearQuery([SpanTermQuery("text", "table"),
+                       SpanTermQuery("text", "query")], slop=3,
+                      in_order=True),
+        SpanNearQuery([SpanTermQuery("text", "scan"),
+                       SpanTermQuery("text", "table")], slop=4,
+                      in_order=False),
+        DisjunctionMaxQuery([TermQuery("text", "table", boost=2.0),
+                             TermQuery("text", "scan")], 0.3),
+        TermQuery("text", "tzzzzzz"),                      # absent term
+        sloppy,                                            # repeated
+    ]
+
+
+@pytest.mark.parametrize("deletes", [False, True])
+def test_mixed_batch_one_pass_score_bits(spark, idx, tmp_path, monkeypatch,
+                                         deletes):
+    """Every shape the collector runs — flat and nested booleans, exact
+    and sloppy phrases, ordered/unordered span nears, dismax, an absent
+    term and a repeated positional query — shares ONE collector pass in
+    search_many and must match per-query search() in rank and float32
+    score BITS, on the clean index and after delete_by_keys."""
+    import shutil
+
+    from rucene_spark.merge import delete_by_keys
+
+    monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", "0")
+    queries = _mixed_batch()
+    d = idx
+    dead = set()
+    if deletes:
+        d = str(tmp_path / "mixed_del")
+        shutil.copytree(idx, d)
+        s0 = IndexSearcher(spark, d)
+        dead = {r["doc_id"] for q in queries[:10]
+                for r in s0.search(q, 2).collect()}
+        delete_by_keys(d, sorted(dead))
+    s = IndexSearcher(spark, d)
+    assert [s._route(q, i, [0])[0] for i, q in enumerate(queries)] == (
+        ["bool"] * 4 + ["phrase"] * 3 + ["span"] * 2 + ["dismax", "bool",
+                                                        "phrase"])
+    by_qid = {}
+    for r in s.search_many(queries, 10).collect():
+        by_qid.setdefault(r["qid"], []).append(r)
+    for i, q in enumerate(queries):
+        got = _bits(by_qid.get(i, []))
+        assert got == _bits(s.search(q, 10).collect()), f"qid {i} {q!r}"
+        assert not dead & {doc for doc, _ in got}, f"qid {i}"
+    assert by_qid.get(5) and _bits(by_qid[5]) == _bits(by_qid[11])
+    assert all(by_qid.get(i) for i in (4, 6, 7, 8, 9))
+    assert 10 not in by_qid

@@ -62,3 +62,36 @@ def test_default_cap_broadcasts_at_probe_scale_count(
     assert IndexSearcher(spark, index_dir)._bcast_deleted
     monkeypatch.setenv("RUCENE_TOMB_BCAST_CAP", "12")
     assert not IndexSearcher(spark, index_dir)._bcast_deleted
+
+
+def test_shared_post_delete_searcher_threads(spark, index_dir, monkeypatch):
+    """Serving threads share one post-delete searcher. Their first
+    collector queries race to fill the tombstone memo, whose fill flips
+    the session-global Arrow conf and restores it: results must equal
+    serial calls and the conf must end at its prior value."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from rucene_spark.query import PhraseQuery
+
+    monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", "0")
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key, "false")
+    spark.conf.set(key, "false")
+    queries = ([TermQuery("text", f"t{i:06d}") for i in range(6)]
+               + [PhraseQuery.build("text", ["t000000", "t000001"],
+                                    slop=2)] * 2)
+    serial = [_topk(IndexSearcher(spark, index_dir), q) for q in queries]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for _ in range(3):  # a fresh searcher each round: an empty memo
+            s = IndexSearcher(spark, index_dir)
+            with ThreadPoolExecutor(max_workers=4) as ex:
+                futs = [ex.submit(_topk, s, q) for q in queries]
+                got = [f.result(timeout=600) for f in futs]
+            assert got == serial
+            assert spark.conf.get(key) == "false"
+    finally:
+        sys.setswitchinterval(old)
+        spark.conf.set(key, prev)
