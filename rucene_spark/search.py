@@ -785,10 +785,8 @@ def _bool_seg_topk(pl: dict, seg: _SegRows, tomb, lucene, ftype, k):
     if rows.size == 0:
         return None
     rc = rc_all[rows]
-    n_exp = int(rc.sum())
     exp_row = np.repeat(rows, rc)
-    cidx = (np.repeat(pl["cl_starts"][seg.kid[rows]], rc) + np.arange(n_exp)
-            - np.repeat(np.cumsum(rc) - rc, rc))
+    cidx = _gather_ranges(pl["cl_starts"][seg.kid[rows]], rc)
     lens_e = seg.counts[exp_row]
     if len(rows) == len(seg.kid) and (rc == 1).all():
         idx = slice(None)
@@ -1312,20 +1310,20 @@ class IndexSearcher:
         segment (``_segs_single_file``). Cost-based routing (the
         reference picks scorers by cost the same way, boolean_query.rs
         BooleanWeight): a single term-scored query also needs
-        RUCENE_COLLECTOR_MIN_DOCS documents — below it the frame path's
-        small shuffles beat the collector's fixed mapInPandas setup
-        (5k docs: 0.05s vs 0.6s measured). A ``batch`` (search_many)
-        pays that setup once for all its queries, so it skips the
-        gate; positional shapes always skip it, because their frame
-        paths shuffle position rows. Routing never changes results —
+        RUCENE_TERM_COLLECTOR on and RUCENE_COLLECTOR_MIN_DOCS documents,
+        the floor kept until the collector-vs-frame crossover is
+        re-measured (ROADMAP). A ``batch`` (search_many) pays the
+        collector's fixed mapInPandas setup once for all its queries, so
+        it skips both; positional shapes always skip them, because their
+        frame paths shuffle position rows. Routing never changes results —
         every route is rank- and score-identical
         (tests/test_search_many.py)."""
         on = lambda name: os.environ.get(name, "1") != "0"  # noqa: E731
         coll = ((self._deleted is None or self._bcast_deleted)
                 and self._segs_single_file())
-        term_ok = (coll and on("RUCENE_TERM_COLLECTOR")
-                   and (batch or self.doc_count >= int(os.environ.get(
-                       "RUCENE_COLLECTOR_MIN_DOCS", "100000"))))
+        term_ok = coll and (batch or (
+            on("RUCENE_TERM_COLLECTOR") and self.doc_count >= int(
+                os.environ.get("RUCENE_COLLECTOR_MIN_DOCS", "100000"))))
         fs = self._flat_specs(q, qid, gid_counter)
         if fs is not None:
             return ("bool" if term_ok else "flat"), fs
@@ -1440,9 +1438,9 @@ class IndexSearcher:
         of each segment, then a per-query window top-k over the
         (query, segment) top-k rows. Flattenable queries the collector
         may not run (tombstones above the broadcast cap, legacy
-        multi-file segments, RUCENE_TERM_COLLECTOR=0) share one batched
-        JVM aggregation branch; only the remaining
-        frame-only shapes keep their own TakeOrdered branch. Stage
+        multi-file segments) share one batched JVM aggregation branch;
+        only the remaining frame-only shapes keep their own TakeOrdered
+        branch. Stage
         count is constant in batch size; rank/score identity vs
         per-query search() is asserted by tests/test_search_many.py."""
         ck = (tuple(repr(q) for q in queries), k, "many")
